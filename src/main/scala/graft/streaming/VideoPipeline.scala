@@ -310,16 +310,21 @@ object VideoPipeline {
     * branches written per micro-batch from the SAME foreachBatch (one
     * state store, no second query re-running the fold).
     *
+    * Sink layout: `<outDir>/detections/batch_id=<id>/` and
+    * `<outDir>/segments/batch_id=<id>/`, one directory per micro-batch,
+    * each with its own `_SUCCESS`. Reading `<outDir>/detections` sees
+    * `batch_id` as a partition column.
+    *
     * Idempotence under micro-batch retry: foreachBatch is at-least-once
     * (a crash between write and checkpoint-commit replays the batch —
     * same batchId, same data), so plain `append` would duplicate rows.
-    * Each batch writes its rows under `batch_id=<id>` with DYNAMIC
-    * partition overwrite: a replay rewrites exactly its own partition
-    * and nothing else, making the sink effectively exactly-once. This
-    * is the Spark-native equivalent of the reference sink's retry
-    * story (DorisSinkBuilder.java:62-95 retries a Stream-Load under a
+    * Each batch instead overwrites its own `batch_id=<id>` directory
+    * and nothing else, so a replay replaces exactly the rows it wrote
+    * before, making the sink effectively exactly-once. This is the
+    * Spark-native equivalent of the reference sink's retry story
+    * (DorisSinkBuilder.java:62-95 retries a Stream-Load under a
     * batch-scoped label so Doris dedupes the re-post; batch_id is our
-    * label, the partition swap our dedupe).
+    * label, the directory overwrite our dedupe).
     */
   def runStreaming(frames: Dataset[VideoFrame], outDir: String,
       checkpointDir: String, cfg: EngineConfig = EngineConfig()) = {
@@ -336,19 +341,45 @@ object VideoPipeline {
   /** One micro-batch → both sinks; idempotent under same-batchId replay
     * (see [[runStreaming]]'s contract note). Public so the replay
     * semantics are testable without orchestrating a mid-batch crash.
+    *
+    * The fold runs exactly once, as one `collect`; both branches are
+    * built from that local result. The collect is bounded: events
+    * carry no frame bytes, and a frame yields at most two (its
+    * detections if it is a keyframe, the segment it closes), so even
+    * when every frame is a keyframe a batch holds at most twice as
+    * many small rows as the frames one trigger admits (the source's
+    * per-trigger limit, e.g. Kafka's `maxOffsetsPerTrigger`).
+    *
+    * The two writes overlap: detections on the calling thread, segments
+    * on a thread started here, which inherits the caller's Spark local
+    * properties (the streaming query's job group, so stopping the query
+    * cancels both). The call returns or throws only after both writes
+    * have ended; a failure of either is rethrown, the other's attached
+    * as suppressed.
+    *
+    * `file:` paths are written through [[NioLocalFileSystem]], bound by
+    * the writes' own options; the session's configuration is untouched.
     */
   def writeEventBatch(batch: Dataset[PipelineEvent], batchId: Long,
       outDir: String): Unit = {
-    val cached = batch.persist()
-    def writeBranch(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(dir)
-    writeBranch(dorisRows(cached), s"$outDir/detections")
-    writeBranch(segmentRows(cached), s"$outDir/segments")
-    cached.unpersist()
-    ()
+    val events = batch.sparkSession.createDataset(batch.collect().toSeq)(batch.encoder)
+    def write(df: DataFrame, branch: String): Unit =
+      df.write.mode("overwrite").options(NioLocalFileSystem.writeOptions)
+        .parquet(s"$outDir/$branch/batch_id=$batchId")
+    var segFailure: Throwable = null // published by join()
+    val segWriter = new Thread(() =>
+      try write(segmentRows(events), "segments")
+      catch { case t: Throwable => segFailure = t },
+      s"segment-sink-batch-$batchId")
+    segWriter.start()
+    try write(dorisRows(events), "detections")
+    catch {
+      case t: Throwable =>
+        segWriter.join()
+        if (segFailure != null) t.addSuppressed(segFailure)
+        throw t
+    }
+    segWriter.join()
+    if (segFailure != null) throw segFailure
   }
 }

@@ -6,6 +6,7 @@ import graft.streaming.{FrameGenerator, VideoPipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Stateful-core semantics (pure fold + streaming e2e): segment
   * boundary at exactly segmentDuration (ref VideoSegmentBuffer.java:48-53),
@@ -331,10 +332,71 @@ class VideoPipelineSpec extends AnyFunSuite {
     VideoPipeline.writeEventBatch(events, batchId = 0L, s"$base/out")
     assert(spark.read.parquet(s"$base/out/detections").count() === dets1)
     assert(spark.read.parquet(s"$base/out/segments").count() === segs1)
-    // a NEW batch still appends (overwrite is per-partition, not global)
+    // a NEW batch still appends (overwrite is per-batch directory, not global)
     VideoPipeline.writeEventBatch(events, batchId = 1L, s"$base/out")
     assert(spark.read.parquet(s"$base/out/detections").count() === 2 * dets1)
     assert(spark.read.parquet(s"$base/out/segments").count() === 2 * segs1)
+    // a replay replaces its batch directory whole: stale files go too
+    val stale = new java.io.File(s"$base/out/detections/batch_id=0/part-stale.parquet")
+    java.nio.file.Files.write(stale.toPath, Array[Byte](1, 2, 3))
+    VideoPipeline.writeEventBatch(events, batchId = 0L, s"$base/out")
+    assert(!stale.exists())
+    assert(spark.read.parquet(s"$base/out/detections").count() === 2 * dets1)
+
+    // one branch failing: the error surfaces only once the other
+    // branch's write has ended, whichever thread each one ran on
+    def failing(broken: String, other: String) = {
+      val out = s"$base/broken_$broken"
+      new java.io.File(out).mkdirs()
+      assert(new java.io.File(s"$out/$broken").createNewFile())
+      val e = intercept[Exception](VideoPipeline.writeEventBatch(events, 0L, out))
+      val writers = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.getName.startsWith("segment-sink") && t.isAlive)
+      assert(writers.isEmpty, "segment writer still running after the throw")
+      assert(new java.io.File(s"$out/$other/batch_id=0/_SUCCESS").exists(),
+        s"$other branch had not finished when the $broken error was thrown")
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(s"$out/$broken")), e)
+    }
+    failing("segments", "detections") // fails on the started thread
+    failing("detections", "segments") // fails on the calling thread
+  }
+
+  test("the sink spawns no process and leaves the session's filesystem binding alone") {
+    import spark.implicits._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val base = java.nio.file.Files.createTempDirectory("graft_forks_").toString
+    val events = VideoPipeline.process(spark.createDataset(
+      FrameGenerator.frames(streams = 2, fps = 5, durationSec = 400)), cfg)
+    assert(spark.streams.active.isEmpty)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try VideoPipeline.writeEventBatch(events, batchId = 0L, s"$base/out")
+    finally rec.stop()
+    val dump = java.nio.file.Paths.get(base, "sink.jfr")
+    rec.dump(dump); rec.close()
+    val forks = RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .filter(e => e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("org.apache.hadoop.fs.RawLocalFileSystem")))
+      .map(_.getString("command"))
+    if (forks.nonEmpty)
+      fail(s"${forks.size} processes spawned by RawLocalFileSystem, e.g. ${forks.take(3)}")
+    assert(spark.read.parquet(s"$base/out/detections").count() > 0)
+
+    val hadoopImpl = spark.sparkContext.hadoopConfiguration.get("fs.file.impl")
+    val sessionImpl = spark.conf.getOption("fs.file.impl")
+    val mem = MemoryStream[VideoFrame](spark)
+    val q = VideoPipeline.runStreaming(mem.toDS(), s"$base/stream",
+      s"$base/ckpt", cfg)
+    mem.addData(FrameGenerator.frames(streams = 2, fps = 5, durationSec = 200))
+    q.processAllAvailable()
+    q.stop()
+    assert(spark.read.parquet(s"$base/stream/detections").count() > 0)
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") === hadoopImpl)
+    assert(spark.conf.getOption("fs.file.impl") === sessionImpl)
   }
 
   test("replayed micro-batch after commit loss does not duplicate sink rows") {
