@@ -1,9 +1,17 @@
 package graft.streaming
 
+import java.io.IOException
+
+import scala.util.control.NonFatal
+
 import graft.functions.DetectionKernels
 import graft.model._
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** The stateful core of the engine — the Spark re-expression of the
@@ -162,11 +170,30 @@ object VideoPipeline {
         GroupStateTimeout.NoTimeout)(groupFn(cfg, det))
   }
 
+  /** Every event column plus `d`: one row per element of a detection
+    * event's `detections` (null elements included) and one row, `d`
+    * null, for every other event and for a detection event with no
+    * detections. It is the one shape both sink branches are projected
+    * from ([[dorisProjection]], [[segmentProjection]]), so a sink can
+    * run it once and build both branches from its rows. Only detection
+    * events are exploded, so every other event stays exactly one row.
+    */
+  def withDetections(events: Dataset[PipelineEvent]): DataFrame =
+    events.toDF().select(col("*"),
+      explode_outer(when(col("kind") === "detection", col("detections"))).as("d"))
+
   /** Detection branch → flat Doris-shaped rows (ref ops F+G:
     * explode detections, flatten bbox, format time, drop empty —
     * sink/DorisSinkBuilder.java:100-124). Pure built-ins.
     */
-  def dorisRows(events: Dataset[PipelineEvent]): DataFrame = {
+  def dorisRows(events: Dataset[PipelineEvent]): DataFrame =
+    dorisProjection(withDetections(events))
+
+  /** The Doris rows of [[withDetections]]' rows. The filter drops the
+    * `d`-null row of an empty detection event, so the result equals a
+    * plain `explode` of the detection events.
+    */
+  private def dorisProjection(rows: DataFrame): DataFrame = {
     // date_format renders in spark.sql.session.timeZone; shift the
     // instant by the session offset first so detection_time is always
     // the UTC wall time — same pinning as segmentPath above.
@@ -178,17 +205,13 @@ object VideoPipeline {
     // session tz it is off by the DST delta; harness sessions run
     // pinned UTC (Verify sets spark.sql.session.timeZone=UTC), where
     // the composition is exact.
-    val sessionTz =
-      events.sparkSession.conf.get("spark.sql.session.timeZone")
-    events.toDF()
-      .filter(col("kind") === "detection" && size(col("detections")) > 0)
+    val sessionTz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
+    rows.filter(col("kind") === "detection" && size(col("detections")) > 0)
       .select(col("streamId").as("stream_id"),
         date_format(
           to_utc_timestamp(timestamp_millis(col("timestamp")), sessionTz),
           "yyyy-MM-dd HH:mm:ss").as("detection_time"),
         col("frameId").as("frame_id"),
-        explode(col("detections")).as("d"))
-      .select(col("stream_id"), col("detection_time"), col("frame_id"),
         col("d.objectClass").as("object_class"),
         col("d.confidence").as("confidence"),
         col("d.bbox.x1").as("bbox_x1"), col("d.bbox.y1").as("bbox_y1"),
@@ -211,8 +234,11 @@ object VideoPipeline {
     * sink, model/VideoSegment.java:17-55).
     */
   def segmentRows(events: Dataset[PipelineEvent]): DataFrame =
-    events.toDF()
-      .filter(col("kind") === "segment")
+    segmentProjection(withDetections(events))
+
+  /** The segment rows of [[withDetections]]' rows. */
+  private def segmentProjection(rows: DataFrame): DataFrame =
+    rows.filter(col("kind") === "segment")
       .select(col("streamId").as("stream_id"),
         col("segment.startTime").as("start_time"),
         col("segment.endTime").as("end_time"),
@@ -308,23 +334,26 @@ object VideoPipeline {
   /** End-to-end streaming wiring (ref job DAG,
     * VideoStreamProcessingJob.java:56-102): one stateful pass, both
     * branches written per micro-batch from the SAME foreachBatch (one
-    * state store, no second query re-running the fold).
+    * state store, no second query re-running the fold). A micro-batch
+    * runs one Spark job, the fold; both sink files are written on the
+    * driver (see [[writeEventBatch]]).
     *
     * Sink layout: `<outDir>/detections/batch_id=<id>/` and
     * `<outDir>/segments/batch_id=<id>/`, one directory per micro-batch,
-    * each with its own `_SUCCESS`. Reading `<outDir>/detections` sees
-    * `batch_id` as a partition column.
+    * each holding one `part-00000` parquet file and its own `_SUCCESS`.
+    * Reading `<outDir>/detections` sees `batch_id` as a partition
+    * column.
     *
     * Idempotence under micro-batch retry: foreachBatch is at-least-once
     * (a crash between write and checkpoint-commit replays the batch —
     * same batchId, same data), so plain `append` would duplicate rows.
-    * Each batch instead overwrites its own `batch_id=<id>` directory
+    * Each batch instead replaces its own `batch_id=<id>` directory
     * and nothing else, so a replay replaces exactly the rows it wrote
     * before, making the sink effectively exactly-once. This is the
     * Spark-native equivalent of the reference sink's retry story
     * (DorisSinkBuilder.java:62-95 retries a Stream-Load under a
     * batch-scoped label so Doris dedupes the re-post; batch_id is our
-    * label, the directory overwrite our dedupe).
+    * label, the directory replacement our dedupe).
     */
   def runStreaming(frames: Dataset[VideoFrame], outDir: String,
       checkpointDir: String, cfg: EngineConfig = EngineConfig()) = {
@@ -342,44 +371,67 @@ object VideoPipeline {
     * (see [[runStreaming]]'s contract note). Public so the replay
     * semantics are testable without orchestrating a mid-batch crash.
     *
-    * The fold runs exactly once, as one `collect`; both branches are
-    * built from that local result. The collect is bounded: events
-    * carry no frame bytes, and a frame yields at most two (its
-    * detections if it is a keyframe, the segment it closes), so even
-    * when every frame is a keyframe a batch holds at most twice as
-    * many small rows as the frames one trigger admits (the source's
-    * per-trigger limit, e.g. Kafka's `maxOffsetsPerTrigger`).
+    * One Spark job: `withDetections(batch)` is collected once, which
+    * runs the fold. The collect is bounded per detection row: events
+    * carry no frame bytes, and a frame yields at most one row per
+    * detection if it is a keyframe (one if it has none) plus one for
+    * the segment it closes, so the rows are at most the frames one
+    * trigger admits (the source's per-trigger limit, e.g. Kafka's
+    * `maxOffsetsPerTrigger`) times the detector's most detections per
+    * frame plus one. Each detection row repeats its event's
+    * `detections` array.
     *
-    * The two writes overlap: detections on the calling thread, segments
-    * on a thread started here, which inherits the caller's Spark local
-    * properties (the streaming query's job group, so stopping the query
-    * cancels both). The call returns or throws only after both writes
-    * have ended; a failure of either is rethrown, the other's attached
-    * as suppressed.
-    *
-    * `file:` paths are written through [[NioLocalFileSystem]], bound by
-    * the writes' own options; the session's configuration is untouched.
+    * Both branches are then projected from those rows as a local
+    * relation, which the optimizer folds to local rows without a job,
+    * and each is written on the calling thread as one parquet file
+    * (see [[writeLocal]]). Both branches are attempted; a failure of
+    * either is rethrown after the other has been written or has
+    * failed, the other's failure attached as suppressed.
     */
   def writeEventBatch(batch: Dataset[PipelineEvent], batchId: Long,
       outDir: String): Unit = {
-    val events = batch.sparkSession.createDataset(batch.collect().toSeq)(batch.encoder)
-    def write(df: DataFrame, branch: String): Unit =
-      df.write.mode("overwrite").options(NioLocalFileSystem.writeOptions)
-        .parquet(s"$outDir/$branch/batch_id=$batchId")
-    var segFailure: Throwable = null // published by join()
-    val segWriter = new Thread(() =>
-      try write(segmentRows(events), "segments")
-      catch { case t: Throwable => segFailure = t },
-      s"segment-sink-batch-$batchId")
-    segWriter.start()
-    try write(dorisRows(events), "detections")
-    catch {
-      case t: Throwable =>
-        segWriter.join()
-        if (segFailure != null) t.addSuppressed(segFailure)
-        throw t
+    val rows = withDetections(batch)
+    val local = batch.sparkSession.createDataFrame(rows.collectAsList(), rows.schema)
+    val failures = Seq("detections" -> dorisProjection _, "segments" -> segmentProjection _)
+      .flatMap { case (branch, project) =>
+        try { writeLocal(project(local), s"$outDir/$branch/batch_id=$batchId"); None }
+        catch { case NonFatal(t) => Some(t) }
+      }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
-    segWriter.join()
-    if (segFailure != null) throw segFailure
+  }
+
+  /** Writes `df`'s rows on the calling thread as the one file
+    * `<dir>/part-00000<ext>`, with Spark's own parquet writer, then
+    * `_SUCCESS`. `dir` is cleared first, so a replay replaces it whole.
+    * The file is written under a `_`-prefixed name, which readers skip,
+    * and renamed into place once complete. `df` should fold to a local
+    * relation; otherwise collecting it runs a job. `file:` paths go
+    * through [[NioLocalFileSystem]], bound by a Hadoop configuration
+    * built for this write only; the session's is untouched.
+    */
+  private def writeLocal(df: DataFrame, dir: String): Unit = {
+    val spark = df.sparkSession
+    val rows = df.queryExecution.executedPlan.executeCollect()
+    val schema = df.schema
+    val conf = spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.writeOptions)
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    try {
+      fs.delete(path, true)
+      if (!fs.mkdirs(path)) throw new IOException(s"cannot create $path")
+      val job = Job.getInstance(conf)
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      val name = s"part-00000${factory.getFileExtension(ctx)}"
+      val tmp = new Path(path, s"_$name")
+      val out = factory.newInstance(tmp.toString, schema, ctx)
+      try rows.foreach(out.write) finally out.close()
+      if (!fs.rename(tmp, new Path(path, name)))
+        throw new IOException(s"cannot rename $tmp into place")
+      fs.create(new Path(path, "_SUCCESS")).close()
+    } finally fs.close()
   }
 }

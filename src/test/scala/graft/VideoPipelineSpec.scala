@@ -342,9 +342,19 @@ class VideoPipelineSpec extends AnyFunSuite {
     VideoPipeline.writeEventBatch(events, batchId = 0L, s"$base/out")
     assert(!stale.exists())
     assert(spark.read.parquet(s"$base/out/detections").count() === 2 * dets1)
+    // an interrupted write leaves its `_`-prefixed temp file behind:
+    // readers skip it, and the replay clears it
+    val batchDir = new java.io.File(s"$base/out/detections/batch_id=0")
+    val partial = new java.io.File(batchDir, "_part-00000.snappy.parquet")
+    java.nio.file.Files.write(partial.toPath, Array[Byte](1, 2, 3))
+    assert(spark.read.parquet(s"$base/out/detections").count() === 2 * dets1)
+    VideoPipeline.writeEventBatch(events, batchId = 0L, s"$base/out")
+    assert(batchDir.list().filter(_.startsWith("_part-")).isEmpty,
+      batchDir.list().mkString(", "))
+    assert(spark.read.parquet(s"$base/out/detections").count() === 2 * dets1)
 
     // one branch failing: the error surfaces only once the other
-    // branch's write has ended, whichever thread each one ran on
+    // branch's write has ended, whichever branch is written first
     def failing(broken: String, other: String) = {
       val out = s"$base/broken_$broken"
       new java.io.File(out).mkdirs()
@@ -358,8 +368,127 @@ class VideoPipelineSpec extends AnyFunSuite {
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(c => String.valueOf(c.getMessage).contains(s"$out/$broken")), e)
     }
-    failing("segments", "detections") // fails on the started thread
-    failing("detections", "segments") // fails on the calling thread
+    failing("segments", "detections") // the second branch fails
+    failing("detections", "segments") // the first branch fails
+  }
+
+  test("a micro-batch runs one Spark job, starts no thread and writes one file per branch") {
+    import spark.implicits._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = java.nio.file.Files.createTempDirectory("graft_onejob_").toString
+    val mem = MemoryStream[VideoFrame](spark)
+    val q = VideoPipeline.runStreaming(mem.toDS(), s"$base/out", s"$base/ckpt", cfg)
+    // jobs by the batch id the stream stamps on them; "fence" marks a
+    // job started after the query stopped
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        val batch =
+          if (p.exists(_.getProperty("graft.test.fence") != null)) Some("fence")
+          else p.filter(_.getProperty("sql.streaming.queryId") == q.id.toString)
+            .flatMap(x => Option(x.getProperty("streaming.sql.batchId")))
+        batch.foreach(jobs.add)
+      }
+    }
+    val rec = new Recording()
+    rec.enable("jdk.ThreadStart").withStackTrace()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      rec.start()
+      val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 400)
+      val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 200000)
+      mem.addData(b1); q.processAllAvailable()
+      mem.addData(b2); q.processAllAvailable()
+      q.stop()
+      rec.stop()
+      // events reach a listener in the order they were posted: once the
+      // fence job is seen, so is every job of the query
+      spark.sparkContext.setLocalProperty("graft.test.fence", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.fence", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("fence"), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(batches.length === 2)
+    for (b <- batches) {
+      // an upper bound: the fold's collect is the batch's only job
+      val n = jobs.asScala.count(_ == b.toString)
+      assert(n <= 1, s"batch $b ran $n Spark jobs")
+      for (branch <- Seq("detections", "segments")) {
+        val files = new java.io.File(s"$base/out/$branch/batch_id=$b").list()
+        assert(files.count(_.startsWith("part-")) === 1, files.mkString(", "))
+        assert(files.contains("_SUCCESS"), files.mkString(", "))
+      }
+    }
+    val dump = java.nio.file.Paths.get(base, "threads.jfr")
+    rec.dump(dump); rec.close()
+    val sinkThreads = RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ThreadStart")
+      .filter(e => e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("graft.streaming.VideoPipeline")))
+    if (sinkThreads.nonEmpty)
+      fail(s"${sinkThreads.size} threads started by the sink, e.g. ${sinkThreads.head.getThread("eventThread").getJavaName}")
+  }
+
+  test("degenerate micro-batches: sink rows equal the batch twins, every branch dir complete") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_degenerate_").toString
+    val t0 = 1700000000000L
+    val seg = VideoSegment("s1", t0, t0 + 180000,
+      VideoPipeline.segmentPath("s1", t0), 4, 1024L, 180000L)
+    val car = Detection("car", 0.9f, BoundingBox(1, 2, 3, 4))
+    def parquetSchema(dir: String) = {
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val part = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getPath), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    val batches = Seq(
+      "no events" -> Seq.empty[PipelineEvent],
+      "segments only" -> Seq(
+        PipelineEvent("segment", "s1", -1L, t0 + 180000, Seq.empty, Some(seg)),
+        PipelineEvent("segment", "s2", -1L, t0 + 180000, Seq.empty,
+          Some(seg.copy(streamId = "s2")))),
+      "empty detections" -> Seq(
+        PipelineEvent("detection", "s1", 1L, t0, Seq.empty, None)),
+      "a null detection" -> Seq(
+        PipelineEvent("detection", "s1", 2L, t0, Seq(null, car), None),
+        PipelineEvent("detection", "s1", 3L, t0 + 40, Seq(null), None)))
+    for (((name, events), id) <- batches.zipWithIndex) {
+      val ds = spark.createDataset(events)
+      VideoPipeline.writeEventBatch(ds, id.toLong, s"$base/out")
+      for ((branch, twin) <- Seq("detections" -> VideoPipeline.dorisRows(ds),
+          "segments" -> VideoPipeline.segmentRows(ds))) {
+        val dir = new java.io.File(s"$base/out/$branch/batch_id=$id")
+        val files = dir.list()
+        assert(files.contains("_SUCCESS"), s"$name/$branch: ${files.mkString(", ")}")
+        assert(files.count(_.startsWith("part-")) === 1, s"$name/$branch: ${files.mkString(", ")}")
+        // readable even when empty: the file carries the branch schema
+        val got = spark.read.parquet(dir.getPath)
+        assert(got.schema.map(f => f.name -> f.dataType) ===
+          twin.schema.map(f => f.name -> f.dataType), s"$name/$branch")
+        def lines(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+        assert(lines(got) === lines(twin), s"$name/$branch")
+        // the file's parquet schema (required vs optional columns
+        // included) is the one Spark's own write of the twin gives
+        val ref = s"$base/ref/$branch/batch_id=$id"
+        twin.write.parquet(ref)
+        assert(parquetSchema(dir.getPath) === parquetSchema(ref), s"$name/$branch")
+      }
+    }
+    // the null element is a row of nulls, as plain explode gives it
+    val nullRows = spark.read.parquet(s"$base/out/detections/batch_id=3")
+      .filter($"object_class".isNull).count()
+    assert(nullRows === 2L)
   }
 
   test("the sink spawns no process and leaves the session's filesystem binding alone") {
