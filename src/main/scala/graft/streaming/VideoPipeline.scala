@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 
 import graft.functions.DetectionKernels
 import graft.model._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
@@ -37,7 +37,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * frame buffer (the reference buffers raw JPEGs only to feed ffmpeg,
   * which is stubbed here; a real encode sink would write frames to
   * object storage per micro-batch and compose manifests instead of
-  * holding them in state). The only shuffle is the groupByKey exchange
+  * holding them in state). The only shuffle is the exchange
   * on streamId, identical to the reference's keyBy.
   */
 object VideoPipeline {
@@ -159,27 +159,37 @@ object VideoPipeline {
     * state across micro-batches. Within a batch frames are sorted by
     * event time; across batches arrival order rules (the reference has
     * no watermarks either — VideoStreamProcessingJob.java:61).
+    *
+    * Grouped by the `streamId` column, not by a key function: a key
+    * function (`groupByKey(_.streamId)`) plans an AppendColumns step
+    * that builds every frame as an object just to read its key, and
+    * generates that step's code again in every task of the input stage.
+    * The exchange hashes the same string either way.
     */
   def process(frames: Dataset[VideoFrame],
       cfg: EngineConfig = EngineConfig(),
       detector: VideoFrame => Seq[Detection] = null): Dataset[PipelineEvent] = {
     import frames.sparkSession.implicits._
     val det = if (detector == null) defaultDetector(cfg) else detector
-    frames.groupByKey(_.streamId)
+    frames.groupBy(col("streamId")).as[String, VideoFrame]
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(groupFn(cfg, det))
   }
 
-  /** Every event column plus `d`: one row per element of a detection
-    * event's `detections` (null elements included) and one row, `d`
-    * null, for every other event and for a detection event with no
-    * detections. It is the one shape both sink branches are projected
-    * from ([[dorisProjection]], [[segmentProjection]]), so a sink can
-    * run it once and build both branches from its rows. Only detection
-    * events are exploded, so every other event stays exactly one row.
+  /** The event columns both sink branches read, one row per element
+    * of a detection event's `detections` (null elements included) as
+    * `d`, and one row, `d` null, for every other event and for a
+    * detection event with no detections. The array itself is replaced
+    * by its size, `detectionCount`, so a frame with k detections is k
+    * rows of one detection each. It is the one shape the Doris branch
+    * is projected from ([[dorisProjection]]) and carries every column
+    * [[segmentProjection]] reads, so a sink can run it once and build
+    * both branches from its rows.
     */
-  def withDetections(events: Dataset[PipelineEvent]): DataFrame =
-    events.toDF().select(col("*"),
+  private def withDetections(events: Dataset[PipelineEvent]): DataFrame =
+    events.toDF().select(col("kind"), col("streamId"), col("frameId"),
+      col("timestamp"), col("segment"),
+      size(col("detections")).as("detectionCount"),
       explode_outer(when(col("kind") === "detection", col("detections"))).as("d"))
 
   /** Detection branch → flat Doris-shaped rows (ref ops F+G:
@@ -191,7 +201,8 @@ object VideoPipeline {
 
   /** The Doris rows of [[withDetections]]' rows. The filter drops the
     * `d`-null row of an empty detection event, so the result equals a
-    * plain `explode` of the detection events.
+    * plain `explode` of the detection events with non-empty
+    * `detections`.
     */
   private def dorisProjection(rows: DataFrame): DataFrame = {
     // date_format renders in spark.sql.session.timeZone; shift the
@@ -206,7 +217,7 @@ object VideoPipeline {
     // pinned UTC (Verify sets spark.sql.session.timeZone=UTC), where
     // the composition is exact.
     val sessionTz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
-    rows.filter(col("kind") === "detection" && size(col("detections")) > 0)
+    rows.filter(col("kind") === "detection" && col("detectionCount") > 0)
       .select(col("streamId").as("stream_id"),
         date_format(
           to_utc_timestamp(timestamp_millis(col("timestamp")), sessionTz),
@@ -234,9 +245,9 @@ object VideoPipeline {
     * sink, model/VideoSegment.java:17-55).
     */
   def segmentRows(events: Dataset[PipelineEvent]): DataFrame =
-    segmentProjection(withDetections(events))
+    segmentProjection(events.toDF())
 
-  /** The segment rows of [[withDetections]]' rows. */
+  /** The segment rows of events, or of [[withDetections]]' rows. */
   private def segmentProjection(rows: DataFrame): DataFrame =
     rows.filter(col("kind") === "segment")
       .select(col("streamId").as("stream_id"),
@@ -336,7 +347,9 @@ object VideoPipeline {
     * branches written per micro-batch from the SAME foreachBatch (one
     * state store, no second query re-running the fold). A micro-batch
     * runs one Spark job, the fold; both sink files are written on the
-    * driver (see [[writeEventBatch]]).
+    * driver (see [[writeEventBatch]]). The fold's input stage runs at
+    * most one task per core, whatever the number of source partitions
+    * in the batch.
     *
     * Sink layout: `<outDir>/detections/batch_id=<id>/` and
     * `<outDir>/segments/batch_id=<id>/`, one directory per micro-batch,
@@ -357,7 +370,12 @@ object VideoPipeline {
     */
   def runStreaming(frames: Dataset[VideoFrame], outDir: String,
       checkpointDir: String, cfg: EngineConfig = EngineConfig()) = {
-    val events = process(frames, cfg)
+    // One input task per core, not one per source partition: a
+    // micro-batch gathers many small partitions (a MemoryStream add,
+    // a Kafka partition's slice), and each task pays fixed costs
+    // (task setup, per-task code generation, one shuffle file per
+    // output partition) that dwarf its few rows.
+    val events = process(frames.coalesce(frames.sparkSession.sparkContext.defaultParallelism), cfg)
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -378,8 +396,8 @@ object VideoPipeline {
     * the segment it closes, so the rows are at most the frames one
     * trigger admits (the source's per-trigger limit, e.g. Kafka's
     * `maxOffsetsPerTrigger`) times the detector's most detections per
-    * frame plus one. Each detection row repeats its event's
-    * `detections` array.
+    * frame plus one. A row holds one detection, never its event's
+    * whole `detections` array.
     *
     * Both branches are then projected from those rows as a local
     * relation, which the optimizer folds to local rows without a job,
@@ -410,7 +428,10 @@ object VideoPipeline {
     * and renamed into place once complete. `df` should fold to a local
     * relation; otherwise collecting it runs a job. `file:` paths go
     * through [[NioLocalFileSystem]], bound by a Hadoop configuration
-    * built for this write only; the session's is untouched.
+    * built for this write only; the session's is untouched. The write
+    * opens a FileSystem instance of its own and closes only that one:
+    * the cached instances of other schemes (hdfs:, s3a:) are shared
+    * with the rest of the JVM and stay open.
     */
   private def writeLocal(df: DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
@@ -418,7 +439,7 @@ object VideoPipeline {
     val schema = df.schema
     val conf = spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.writeOptions)
     val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
+    val fs = FileSystem.newInstance(path.toUri, conf)
     try {
       fs.delete(path, true)
       if (!fs.mkdirs(path)) throw new IOException(s"cannot create $path")

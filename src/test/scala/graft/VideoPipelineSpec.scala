@@ -153,6 +153,15 @@ class VideoPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("the fold's input stage plans no per-frame key function") {
+    import spark.implicits._
+    val events = VideoPipeline.process(spark.createDataset(
+      FrameGenerator.frames(streams = 2, fps = 5, durationSec = 20)), cfg)
+    val plan = events.queryExecution.sparkPlan // before adaptive execution wraps it
+    assert(plan.collect { case p: org.apache.spark.sql.execution.AppendColumnsExec => p }.isEmpty,
+      plan.treeString)
+  }
+
   test("streaming e2e (MemoryStream, 2 batches) matches single-batch run") {
     import spark.implicits._
     val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
@@ -436,6 +445,45 @@ class VideoPipelineSpec extends AnyFunSuite {
       fail(s"${sinkThreads.size} threads started by the sink, e.g. ${sinkThreads.head.getThread("eventThread").getJavaName}")
   }
 
+  test("a micro-batch's stages run at most one task per core, however many source partitions") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val base = java.nio.file.Files.createTempDirectory("graft_tasks_").toString
+    val mem = MemoryStream[VideoFrame](spark)
+    // tasks per stage of the query; -1 marks the fence stage started
+    // after the query stopped
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("graft.test.fence") != null)) stages.add(-1)
+        else if (p.exists(_.getProperty("sql.streaming.queryId") != null))
+          stages.add(e.stageInfo.numTasks)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // twelve adds before the query starts: twelve source partitions
+      // in its first micro-batch
+      FrameGenerator.frames(streams = 2, fps = 5, durationSec = 240)
+        .grouped(200).foreach(mem.addData(_))
+      val q = VideoPipeline.runStreaming(mem.toDS(), s"$base/out", s"$base/ckpt", cfg)
+      q.processAllAvailable()
+      q.stop()
+      spark.sparkContext.setLocalProperty("graft.test.fence", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.fence", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!stages.contains(-1) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(stages.contains(-1), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    stages.remove(-1)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(stages.asScala.nonEmpty)
+    assert(stages.asScala.forall(_ <= math.max(cores, spark.conf.get("spark.sql.shuffle.partitions").toInt)),
+      s"tasks per stage ${stages.asScala.mkString(", ")} with $cores cores")
+  }
+
   test("degenerate micro-batches: sink rows equal the batch twins, every branch dir complete") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_degenerate_").toString
@@ -526,6 +574,30 @@ class VideoPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/stream/detections").count() > 0)
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") === hadoopImpl)
     assert(spark.conf.getOption("fs.file.impl") === sessionImpl)
+  }
+
+  test("the sink closes no cached FileSystem: a remote store's instance stays usable") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val base = java.nio.file.Files.createTempDirectory("graft_cachedfs_").toString
+    val events = VideoPipeline.process(spark.createDataset(
+      FrameGenerator.frames(streams = 2, fps = 5, durationSec = 400)), cfg)
+    val uri = java.net.URI.create(s"${CachedTestFileSystem.Scheme}:///")
+    spark.conf.set(s"fs.${CachedTestFileSystem.Scheme}.impl", classOf[CachedTestFileSystem].getName)
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      val shared = FileSystem.get(uri, conf).asInstanceOf[CachedTestFileSystem]
+      val out = s"${CachedTestFileSystem.Scheme}://$base/out"
+      VideoPipeline.writeEventBatch(events, batchId = 0L, out)
+      VideoPipeline.writeEventBatch(events, batchId = 1L, out)
+      assert(!shared.closed, "the sink closed the JVM-wide cached instance")
+      assert(FileSystem.get(uri, conf) eq shared)
+      assert(shared.exists(new Path(s"$out/segments/batch_id=1/_SUCCESS")))
+      shared.close()
+    } finally spark.conf.unset(s"fs.${CachedTestFileSystem.Scheme}.impl")
+    val dets = spark.read.parquet(s"$base/out/detections")
+    assert(dets.count() > 0)
+    assert(dets.select("batch_id").distinct().count() === 2L)
   }
 
   test("replayed micro-batch after commit loss does not duplicate sink rows") {
@@ -668,4 +740,20 @@ class VideoPipelineSpec extends AnyFunSuite {
     assert(rows.head.getAs[Long]("frame_id") === 2L)
     assert(rows.head.getAs[String]("detection_time") === "2023-11-14 22:13:20")
   }
+}
+
+/** Local files under a scheme of its own whose instances the Hadoop
+  * FileSystem cache shares, as it shares a remote store's (hdfs:,
+  * s3a:): `FileSystem.get` hands every caller the same instance, so
+  * one caller closing it breaks the others. `closed` records that.
+  */
+class CachedTestFileSystem extends graft.streaming.NioRawLocalFileSystem {
+  @volatile var closed = false
+  override def getUri: java.net.URI = java.net.URI.create(s"${CachedTestFileSystem.Scheme}:///")
+  override def getScheme: String = CachedTestFileSystem.Scheme
+  override def close(): Unit = { closed = true; super.close() }
+}
+
+object CachedTestFileSystem {
+  val Scheme = "graftcached"
 }
